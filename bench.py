@@ -363,7 +363,12 @@ def main() -> None:
     from mini_etl_spark.dag import PipelineDAG
 
     host_load_before = _host_load()
-    spark = get_spark("bench")
+    # dead broadcast/checkpoint/shuffle blocks are freed only after a driver
+    # GC, which a large, lightly-used heap rarely runs: force one every 30 s
+    # so late battery positions do not pay for earlier queries' leftovers
+    spark = get_spark(
+        "bench", extra_conf={"spark.cleaner.periodicGC.interval": "30s"}
+    )
     spark.sparkContext.setLogLevel("ERROR")
     tmp = tempfile.mkdtemp(prefix="bench_out_")
     queries = entry.queries()
@@ -633,22 +638,6 @@ def main() -> None:
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist()  # raw RDD persists (none expected, belt+braces)
 
-    def drain_session_state() -> None:
-        # Between QUERIES only, never inside a timed region (r12, guide §1
-        # steady-state): unpersist/clearCache drop the *references*, but
-        # broadcast pieces, localCheckpoint blocks and shuffle files are
-        # only physically freed when the ContextCleaner sees their weak
-        # references die — i.e. after a driver GC. On a 32 GB driver heap
-        # full GCs essentially never happen on their own, so a 100-query
-        # session accumulates dead blocks and the LATE queries time 2-3×
-        # slow from storage/GC pressure (measured: kmeans_clusters 4.5 s at
-        # battery position ~80 vs 1.6 s isolated; simhash_dedup 9.6 → 3.0 s
-        # with this drain). One System.gc() between queries makes every
-        # battery position measure like a fresh session — the same
-        # one-query-per-session steady state clear_cached_state targets.
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(0.2)
-
     # SPARK_GRAFT_BENCH_ONLY: comma-separated query names — restrict the
     # battery (e.g. at replica scale, where the full 90+ set won't fit a
     # session). B1-B5 are always kept: the paired gate stays comparable.
@@ -677,7 +666,6 @@ def main() -> None:
         # artifact showed 2.1x phantom slowdowns from machine load that
         # no re-run reproduced — VERDICT r4 #5)
         timings_min[name] = round(min(samples), 3)
-        drain_session_state()
     for name, fn in extensions.items():
         # Same steady-state protocol as B1-B5: the first pass (recorded as
         # cold_queries) pays one-time Janino codegen compile of the plan —
@@ -698,7 +686,6 @@ def main() -> None:
             clear_cached_state()
         timings[name] = round(min(warm_samples), 3)
         timings_min[name] = timings[name]  # already a min — recorded uniformly
-        drain_session_state()
 
     shutil.rmtree(tmp, ignore_errors=True)
     total = round(sum(timings.values()), 3)
@@ -737,6 +724,7 @@ def main() -> None:
         "queries_min": timings_min,
         "sf": _sf_from_dir(SF_DIR),
         "cpus": os.environ.get("SPARK_GRAFT_CPUS", "all"),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "ref_queries": ref_timings,
         "ref_queries_min": ref_timings_min,
         "ref_total_b1_b5": ref_b,
@@ -788,10 +776,7 @@ def main() -> None:
             "Extension first-pass times — including one-time "
             "Janino codegen compile, which amortizes to zero on a "
             "long-running cluster — are reported separately as "
-            "cold_queries. Between queries (outside every timed "
-            "region) the session drains dead broadcast/checkpoint "
-            "blocks with one System.gc() so late battery positions "
-            "measure like a fresh session (r12; see OPTIMIZATION_r12.md)."
+            "cold_queries."
         ),
     }
     # The full per-query map (~60 entries) outgrew the driver's tail
@@ -828,6 +813,7 @@ def main() -> None:
         "unit": "sec",
         "sf": full["sf"],
         "cpus": full["cpus"],
+        "default_parallelism": full["default_parallelism"],
         "queries": {k: timings[k] for k in paired},
         "queries_min": {k: timings_min[k] for k in paired},
         "ref_queries": ref_timings,

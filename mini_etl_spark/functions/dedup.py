@@ -504,7 +504,7 @@ def _prefix_exact_pairs(
     # a pair-level groupBy shuffles the whole match stream once (the
     # accumulated PPJoin filter c + min(|A|−pa_max, |B|−pb_max) was
     # implemented and A/B-measured in r13: 20× replica fixture wall
-    # 171 s → 254 s — rejected; see OPTIMIZATION_r13.md). Survivors of
+    # 171 s → 254 s — rejected; recorded in CHANGES.md). Survivors of
     # the threshold filter (≈ true pairs) are deduplicated at the end.
     cand = a.join(
         b,
@@ -1628,40 +1628,8 @@ def embedding_cosine_pairs(
     ~10⁶+ vectors a single row would exceed task memory / the 2 GB Arrow
     array ceiling); beyond that use :func:`embedding_cosine_pairs_lsh`
     (bucketed candidates via ``similarity.lsh_pair_candidates``, then the
-    same exact verification). That bound is GUARDED, not just prose
-    (r13): when the input's optimizer size estimate exceeds
-    ``MINI_ETL_EMBED_GEMM_LIMIT_BYTES`` (default 1 GiB ≈ 4M 64-dim
-    float32 vectors; <= 0 disables) the operator warns and routes to the
-    LSH path — candidates become approximate (hyperplane-LSH recall),
-    verification stays exact. The check is driver-side statistics only;
-    no job runs, so small inputs pay nothing."""
-    import os
-    import warnings
-
+    same exact verification)."""
     import pyarrow as pa_mod
-
-    limit = int(
-        os.environ.get("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", 1024**3)
-    )
-    if limit > 0:
-        est = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        if est > limit:
-            warnings.warn(
-                f"embedding_cosine_pairs: input's estimated size ({est} "
-                f"bytes) exceeds the all-pairs block-GEMM guard ({limit} "
-                "bytes) — whole-block rows would not fit a task. Routing "
-                "to embedding_cosine_pairs_lsh (LSH candidates, exact "
-                "verification; recall follows the LSH S-curve). Call the "
-                "LSH variant directly to tune its parameters, or raise "
-                "MINI_ETL_EMBED_GEMM_LIMIT_BYTES if the corpus truly "
-                "fits.",
-                stacklevel=2,
-            )
-            return embedding_cosine_pairs_lsh(
-                df, vec_col=vec_col, id_col=id_col, threshold=threshold
-            )
 
     norm = F.sqrt(
         F.aggregate(

@@ -711,55 +711,6 @@ def zorder_write(
     )
 
 
-# Exact `percentile` is a TypedImperativeAggregate that merges a
-# value→count map of the whole group on ONE reduce task — fine at oracle
-# scale, an OOM hazard when a single group's distinct values run to the
-# billions. The guard reads the optimizer's size ESTIMATE for the input
-# plan (driver-side statistics only — no job, no scan, so it costs the
-# timed query paths nothing) and falls back to `percentile_approx` with a
-# loud warning above the limit. The estimate is file-size-derived for
-# scans and therefore conservative after selective filters: the fallback
-# can only fire EARLY, never late. Declared oracle queries run orders of
-# magnitude below the default, so their exact results are untouched.
-_EXACT_PERCENTILE_LIMIT_BYTES = 8 * 1024**3
-
-
-def _exact_percentile_guarded(df, exact: bool, op_name: str) -> bool:
-    """Resolve the effective `exact` flag under the scale guard above.
-    Returns False (approx) when exact was requested but the input's
-    estimated size exceeds ``_EXACT_PERCENTILE_LIMIT_BYTES`` (override via
-    env ``MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES``; <= 0 disables)."""
-    if not exact:
-        return False
-    import os
-    import warnings
-
-    limit = int(
-        os.environ.get(
-            "MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES",
-            _EXACT_PERCENTILE_LIMIT_BYTES,
-        )
-    )
-    if limit <= 0:
-        return True
-    est = int(
-        df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    if est > limit:
-        warnings.warn(
-            f"{op_name}: exact percentile requested but the input's "
-            f"estimated size ({est} bytes) exceeds the single-task "
-            f"value-map guard ({limit} bytes) — falling back to "
-            "percentile_approx (mergeable sketch, same plan shape; "
-            "boundary-adjacent rows may flip). Pass exact=False to "
-            "silence, or raise MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES "
-            "if one task really can hold the group's value multiset.",
-            stacklevel=3,
-        )
-        return False
-    return True
-
-
 def robust_outliers(
     df,
     value_col: str,
@@ -791,11 +742,6 @@ def robust_outliers(
     At 100 TB pass ``exact=False``: ``percentile_approx`` (mergeable
     KLL-style sketch, constant memory per group) with identical plan
     shape; boundary-adjacent rows may flip, bulk/spike verdicts do not.
-    ``exact=True`` is additionally guarded: when the input's estimated
-    size exceeds ``MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES`` (default
-    8 GiB) the operator warns and uses the approx form — the exact
-    aggregate merges each group's value multiset on one task and would
-    OOM it first (see ``_exact_percentile_guarded``).
 
     ``mode="outliers"`` (default) returns only the flagged rows (plus
     ``__v`` fixed value, ``group_median``, ``group_mad``);
@@ -813,11 +759,7 @@ def robust_outliers(
         F.floor(F.col(value_col).cast("double") * F.lit(float(scale)) + F.lit(0.5))
         .cast("double"),
     )
-    pct = (
-        "percentile"
-        if _exact_percentile_guarded(df, exact, "robust_outliers")
-        else "percentile_approx"
-    )
+    pct = "percentile" if exact else "percentile_approx"
     # localCheckpoint the (tiny, one-row-per-group) median frame: it is
     # referenced by BOTH broadcast joins below, and without materialization
     # each broadcast build re-executes the whole scan + exact-percentile
@@ -976,12 +918,7 @@ def quantile_buckets(
     100 TB pass ``exact=False`` for ``percentile_approx`` (mergeable
     sketch, constant memory): same plan shape and bucket invariants
     (``buckets − 1`` monotone boundaries), boundary-adjacent rows may
-    shift one bucket. ``exact=True`` is additionally guarded: when the
-    input's estimated size exceeds
-    ``MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES`` (default 8 GiB) the
-    operator warns and uses the approx form rather than merge the whole
-    column's value multiset on one task (see
-    ``_exact_percentile_guarded``).
+    shift one bucket.
     """
     from pyspark.sql import functions as F
 
@@ -991,11 +928,7 @@ def quantile_buckets(
         F.col(column).cast("double") * F.lit(float(scale)) + F.lit(0.5)
     ).cast("double")
     fracs = [i / buckets for i in range(1, buckets)]
-    pct = (
-        "percentile"
-        if _exact_percentile_guarded(df, exact, "quantile_buckets")
-        else "percentile_approx"
-    )
+    pct = "percentile" if exact else "percentile_approx"
     row = df.agg(
         F.expr(
             f"{pct}(floor(cast({column} as double) * {float(scale)!r} + 0.5), "

@@ -9,14 +9,15 @@ rely on implicit row order, which a distributed table does not have. So:
 
 - ``keep="any"`` (default) → ``dropDuplicates`` — cheapest, a hash aggregate
   on the subset; use when any representative is fine.
-- ``keep="first"`` / ``"last"`` → require ``order_by``; implemented with
-  ``row_number()`` over a window partitioned by the subset.
+- ``keep="first"`` / ``"last"`` → require ``order_by``; implemented as one
+  hash aggregate on the subset that picks the whole row with
+  ``min_by``/``max_by`` of the ordering key (no window sort).
 - ``keep=False`` → keep only rows whose key appears exactly once (count-over-
   window == 1).
 
-At 100 TB the window variants shuffle once on the subset keys — identical
-cost shape to groupBy; skew on hot keys is handled by AQE. For exact full-row
-dedup at scale prefer ``keep="any"`` which avoids the window sort.
+At 100 TB every variant shuffles once on the subset keys — identical cost
+shape to groupBy; skew on hot keys is handled by AQE. Only ``keep=False``
+sorts within the window; the others are hash aggregates.
 """
 
 from __future__ import annotations

@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Round-13 per-query measurement harness (optimization guide §1).
+"""Per-query measurement harness.
 
 For each requested query key: one untimed warm pass (codegen), then N timed
-noop-sink passes (same protocol as bench.py extensions), plus the
-``explain("formatted")`` plan captured to ``plans/r12/<key>_<tag>.txt``.
+noop-sink passes (same protocol as bench.py extensions). With
+``--plans-dir DIR`` the ``explain("formatted")`` plan of each key is also
+written to ``DIR/<key>_<tag>.txt``.
 
 Usage:
-    python scripts/measure_r13.py --keys set_jaccard,pagerank --tag before
-    python scripts/measure_r13.py --all --tag before          # every key
-    python scripts/measure_r13.py --keys ... --runs 3
+    python scripts/measure.py --keys set_jaccard,pagerank --tag before
+    python scripts/measure.py --all --tag before --plans-dir plans/run1
+    python scripts/measure.py --keys ... --runs 3
 
 Prints one JSON line: {"timings": {key: best_sec}, "cold": {...}, "tag": ...}.
 Plans and timings are measurement artifacts only — nothing here is on any
@@ -27,7 +28,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -36,20 +36,13 @@ def main() -> None:
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--no-plans", action="store_true")
-    ap.add_argument(
-        "--gc",
-        action="store_true",
-        help="System.gc() between keys (drains ContextCleaner backlog of "
-        "broadcast/checkpoint blocks that otherwise inflates late-session "
-        "timings ~2x; outside every timed region)",
-    )
+    ap.add_argument("--plans-dir")
     args = ap.parse_args()
 
     import __spark_entry__ as entry
     from mini_etl_spark.session import get_spark
 
-    spark = get_spark("measure_r13")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry.queries()
     if args.all:
@@ -60,8 +53,8 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown keys: {unknown}")
 
-    plans_dir = os.path.join(REPO, "plans", "r13")
-    os.makedirs(plans_dir, exist_ok=True)
+    if args.plans_dir:
+        os.makedirs(args.plans_dir, exist_ok=True)
 
     # codegen/scheduler warm-up, untimed
     spark.read.parquet(f"{SF_DIR}/lineitem.parquet").count()
@@ -71,27 +64,17 @@ def main() -> None:
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist()
 
-    def drain_session_state() -> None:
-        # Between KEYS only (never between timed passes of one key):
-        # broadcast pieces and checkpoint blocks are freed by the
-        # ContextCleaner only after the driver GCs their references — on a
-        # 32g heap full GCs are rare, so blocks pile up across a 161-query
-        # session and late keys measure ~2x slow from storage/GC pressure.
-        if args.gc:
-            spark.sparkContext._jvm.System.gc()
-            time.sleep(0.2)
-
     timings: dict[str, float] = {}
     cold: dict[str, float] = {}
     for key in keys:
         fn = queries[key]
-        spark.sparkContext.setJobDescription(f"r13:{key}")
+        spark.sparkContext.setJobDescription(key)
         df = fn(spark, SF_DIR)
-        if not args.no_plans:
+        if args.plans_dir:
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            with open(os.path.join(plans_dir, f"{key}_{args.tag}.txt"), "w") as fh:
+            with open(os.path.join(args.plans_dir, f"{key}_{args.tag}.txt"), "w") as fh:
                 fh.write(plan)
         t0 = time.monotonic()
         df.write.format("noop").mode("overwrite").save()
@@ -109,7 +92,6 @@ def main() -> None:
             clear_cached_state()
         timings[key] = round(best, 3)
         spark.sparkContext.setJobDescription(None)
-        drain_session_state()
         print(f"# {key}: warm {timings[key]} cold {cold[key]}", file=sys.stderr)
 
     print(json.dumps({

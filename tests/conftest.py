@@ -19,38 +19,29 @@ SF_SMALL = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_SF_ORACLE", "/root/testdata/sf0.01")
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "quick: oracle, plan-shape and bench-contract checks (pytest -m quick)",
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
-    session = get_spark("mini-etl-spark-tests", shuffle_partitions=8)
+    # get_spark's default 32g heap exceeds small boxes' RAM: the heap then
+    # outgrows memory before G1 collects, and the OOM killer takes the JVM.
+    # The suite's inputs are tiny, so 4g is plenty. Dead broadcast,
+    # checkpoint and shuffle blocks are freed only after a driver GC, so
+    # the cleaner forces one every 30 s across the ~1000-test session.
+    session = get_spark(
+        "mini-etl-spark-tests",
+        shuffle_partitions=8,
+        extra_conf={
+            "spark.driver.memory": "4g",
+            "spark.cleaner.periodicGC.interval": "30s",
+        },
+    )
     yield session
-
-
-# The whole suite shares ONE JVM. unpersist/clearCache drop *references*,
-# but broadcast pieces, localCheckpoint blocks and shuffle files are only
-# physically freed once a driver GC lets the ContextCleaner see the weak
-# references die — and on a 32 GB heap full GCs essentially never fire on
-# their own, so across ~1000 tests the block manager fills with dead state
-# and LATE tests run 2-10× slower (the same backlog bench.py's
-# drain_session_state() fixed for the query battery in r12: e.g.
-# near_dup_groups_star measured 51 s at suite position ~600 vs ~5 s
-# isolated). One System.gc() every few tests keeps every position running
-# like a fresh session; it only fires when a session already exists, so
-# Spark-free tests pay nothing.
-_GC_EVERY = 5
-_test_counter = {"n": 0}
-
-
-@pytest.fixture(autouse=True)
-def _drain_jvm_state_periodically():
-    yield
-    _test_counter["n"] += 1
-    if _test_counter["n"] % _GC_EVERY:
-        return
-    from pyspark.sql import SparkSession
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.sparkContext._jvm.System.gc()
 
 
 @pytest.fixture(scope="session")

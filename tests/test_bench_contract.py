@@ -8,6 +8,10 @@ import importlib.util
 import os
 import tempfile
 
+import pytest
+
+pytestmark = pytest.mark.quick
+
 
 def _bench():
     spec = importlib.util.spec_from_file_location(

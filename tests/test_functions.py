@@ -9,6 +9,8 @@ must equal exact Jaccard; ANN recall must be high on planted clusters.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -380,7 +382,10 @@ def test_embedding_cosine_pairs_golden(spark):
         ],
         "vec_id bigint, embedding array<float>",
     )
-    pairs = dd.embedding_cosine_pairs(df, threshold=0.95).collect()
+    # any warning fails the test: the exact block-GEMM path never reroutes
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        pairs = dd.embedding_cosine_pairs(df, threshold=0.95).collect()
     assert [(p.id_a, p.id_b) for p in pairs] == [(1, 2)]
     assert pairs[0].cosine > 0.99
 

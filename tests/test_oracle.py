@@ -23,6 +23,8 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 from tests.conftest import SF_ORACLE  # noqa: E402
 
+pytestmark = pytest.mark.quick
+
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",

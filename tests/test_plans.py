@@ -13,6 +13,8 @@ from mini_etl_spark.sources import read_parquet
 
 from tests.conftest import SF_SMALL
 
+pytestmark = pytest.mark.quick
+
 
 @pytest.fixture(scope="module")
 def lineitem(spark):

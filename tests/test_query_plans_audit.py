@@ -18,6 +18,8 @@ from mini_etl_spark import plans  # noqa: E402
 
 from tests.conftest import SF_SMALL  # noqa: E402
 
+pytestmark = pytest.mark.quick
+
 INTENTIONAL_THETA_JOINS = {"cosine_pairs"}
 
 # Queries that broadcast a ONE-ROW scalar aggregate (N, avgdl, thresholds…)

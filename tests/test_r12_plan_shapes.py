@@ -23,9 +23,13 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mini_etl_spark import plans  # noqa: E402
+
+pytestmark = pytest.mark.quick
 
 
 def test_simhash_pairs_verifies_inside_band_join(spark, sample_df):

@@ -16,10 +16,8 @@ work) plus bit-level equivalence tests for the rewritten fast paths:
   equals the direct per-pair-expression join bit-for-bit;
 - ``_span_postings`` drops document-frequency-1 spans (they cannot form
   a pair) before the self-join;
-- the exact-percentile scale guard falls back (loudly) to
-  ``percentile_approx`` above the size limit and stays exact below it;
-- the ``embedding_cosine_pairs`` block-GEMM guard routes oversized
-  inputs to the LSH path with a warning.
+- ``exact=True`` percentile operators stay exact whatever the input's
+  optimizer statistics (a ``createDataFrame`` frame has none).
 """
 
 from __future__ import annotations
@@ -34,6 +32,8 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mini_etl_spark import plans  # noqa: E402
+
+pytestmark = pytest.mark.quick
 
 
 def _capture_checkpoint_plans(monkeypatch):
@@ -310,54 +310,35 @@ def test_span_postings_drop_df1_spans(spark):
     assert all(v >= 2 for v in c.values()), c
 
 
-def test_exact_percentile_guard_falls_back_loudly(spark, monkeypatch):
-    from pyspark.sql import functions as F
-
-    from mini_etl_spark import maintenance as mt
-
-    df = spark.range(1000).select(
-        (F.col("id") % 7).alias("g"), (F.col("id") * 1.5).alias("v")
-    )
-    monkeypatch.setenv("MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES", "1")
-    with pytest.warns(UserWarning, match="falling back to percentile_approx"):
-        out = mt.quantile_buckets(df, "v", buckets=4)
-    assert "qbucket" in out.columns
-    with pytest.warns(UserWarning, match="falling back to percentile_approx"):
-        mt.robust_outliers(df, "v", group_col="g").collect()
-
-
-def test_exact_percentile_guard_stays_exact_below_limit(spark, monkeypatch):
+@pytest.mark.parametrize("source", ["range", "createDataFrame"])
+def test_exact_percentile_is_exact(spark, source):
+    import collections
     import warnings
 
     from pyspark.sql import functions as F
 
     from mini_etl_spark import maintenance as mt
 
-    df = spark.range(1000).select((F.col("id") * 1.5).alias("v"))
-    monkeypatch.delenv("MINI_ETL_EXACT_PERCENTILE_LIMIT_BYTES", raising=False)
+    if source == "range":
+        df = spark.range(1000).select(
+            (F.col("id") % 4).alias("g"), (F.col("id") * 1.5).alias("v")
+        )
+    else:
+        # no file statistics: the optimizer's size estimate is Long.MaxValue
+        df = spark.createDataFrame(
+            [(i % 4, i * 1.5) for i in range(1000)], "g bigint, v double"
+        )
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         out = mt.quantile_buckets(df, "v", buckets=4)
-    # exact quartile boundaries of 0, 1.5, ..., 1498.5 at scale=100:
-    # deterministic check that the exact branch ran
-    import collections
-
+        flagged = mt.robust_outliers(df, "v", group_col="g", mode="flag")
+    # exact quartile boundaries of 0, 1.5, ..., 1498.5 at scale=100
     counts = collections.Counter(r["qbucket"] for r in out.collect())
     assert counts == {0: 250, 1: 250, 2: 250, 3: 250}, counts
-
-
-def test_embedding_gemm_guard_routes_to_lsh(spark, monkeypatch):
-    from mini_etl_spark.functions import dedup as dd
-
-    rng = np.random.default_rng(3)
-    rows = [
-        (int(i), [float(x) for x in rng.standard_normal(8)]) for i in range(50)
-    ]
-    df = _vec_frame(spark, rows)
-    monkeypatch.setenv("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", "1")
-    with pytest.warns(UserWarning, match="Routing .*lsh"):
-        out = dd.embedding_cosine_pairs(df, "embedding", "vec_id", 0.95)
-    assert out.columns == ["id_a", "id_b", "cosine"]
-    monkeypatch.setenv("MINI_ETL_EMBED_GEMM_LIMIT_BYTES", "0")
-    # 0 disables the guard entirely
-    dd.embedding_cosine_pairs(df, "embedding", "vec_id", 0.95).collect()
+    # exact group medians of (g + 498) * 1.5 at scale=100; the approx
+    # sketch returns different values on these inputs
+    medians = {
+        r["g"]: r["group_median"]
+        for r in flagged.select("g", "group_median").distinct().collect()
+    }
+    assert medians == {0: 74700.0, 1: 74850.0, 2: 75000.0, 3: 75150.0}, medians
